@@ -34,8 +34,33 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..functions.paths import field_name_to_column
+
+
+def index_schema(meta: dict) -> StructType:
+    """Schema of a materialized postings index's files, derived from what
+    its catalog entry or streaming ``_LATEST`` marker records: the key
+    columns (``value``, or ``v_<f>`` per composite field) as string,
+    ``chunk bigint`` when chunked, and ``doc_ids array<bigint>``.
+
+    Every index writer selects into this column order and every index
+    reader passes it to ``spark.read.schema``, so no read runs Spark's
+    schema-inference job over the index files."""
+    comp = meta.get("composite_fields")
+    keys = [f"v_{f}" for f in comp] if comp else ["value"]
+    fields = [StructField(k, StringType()) for k in keys]
+    if meta.get("chunked") or meta.get("max_postings_per_row") is not None:
+        fields.append(StructField("chunk", LongType()))
+    fields.append(StructField("doc_ids", ArrayType(LongType())))
+    return StructType(fields)
 
 
 def postings(
@@ -98,6 +123,14 @@ def postings_chunked(
         .withColumn("chunk", F.pmod(F.xxhash64("doc_id"), F.col("n_chunks")))
         .groupBy("value", "chunk")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
+    )
+
+
+def merge_chunks(df: DataFrame, keys: list[str]) -> DataFrame:
+    """One sorted ``doc_ids`` array per key from several rows per key
+    (chunks, segments, or old and new postings of a merge)."""
+    return df.groupBy(*keys).agg(
+        F.expr("sort_array(flatten(collect_list(doc_ids))) AS doc_ids")
     )
 
 

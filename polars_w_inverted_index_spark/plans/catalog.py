@@ -20,7 +20,12 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.inverted_index import postings, postings_chunked
+from ..operators.inverted_index import (
+    index_schema,
+    merge_chunks,
+    postings,
+    postings_chunked,
+)
 
 
 def _fingerprint_walk(src: str) -> str | None:
@@ -85,6 +90,7 @@ class IndexCatalog:
     ) -> str:
         """Materialize the postings index for (table, field) → parquet."""
         path = self._path(table, field)
+        schema = index_schema({"chunked": chunked})
 
         def _build_and_write(frame: DataFrame) -> None:
             idx = (
@@ -96,7 +102,9 @@ class IndexCatalog:
                 idx = idx.repartition(num_buckets, "value").sortWithinPartitions(
                     "value"
                 )
-            idx.write.mode("overwrite").parquet(path)
+            idx.select(*schema.fieldNames()).write.mode("overwrite").parquet(
+                path
+            )
 
         # Bind the index to its source data: the Catalyst rule refuses to
         # serve an index whose recorded source doesn't cover the scanned
@@ -199,6 +207,8 @@ class IndexCatalog:
             f"_staging_{os.path.basename(table)}_{uuid.uuid4().hex[:8]}",
         )
 
+        schema = index_schema({})
+
         def _build_and_write(frame: DataFrame) -> None:
             idx = (
                 frame.select(F.col(doc_id_col).cast("long").alias("_id"), pairs)
@@ -207,7 +217,9 @@ class IndexCatalog:
                 .groupBy("field", "value")
                 .agg(F.sort_array(F.collect_list("_id")).alias("doc_ids"))
             )
-            idx.write.mode("overwrite").partitionBy("field").parquet(staging)
+            idx.select("field", *schema.fieldNames()).write.mode(
+                "overwrite"
+            ).partitionBy("field").parquet(staging)
 
         src = self._source_root(df) if self._is_plain_scan(df) else None
         fp = self._write_with_stable_fingerprint(src, df, _build_and_write)
@@ -220,9 +232,9 @@ class IndexCatalog:
                 shutil.move(part_dir, path)
             else:  # field was all-null: a valid, empty index (a bare
                 # directory would fail schema inference on read)
-                self.spark.createDataFrame(
-                    [], "value string, doc_ids array<bigint>"
-                ).write.mode("overwrite").parquet(path)
+                self.spark.createDataFrame([], schema).write.mode(
+                    "overwrite"
+                ).parquet(path)
             # partitioned writes put _SUCCESS at the staging root only;
             # each index dir needs its own marker for the serving gates
             open(os.path.join(path, "_SUCCESS"), "w").close()
@@ -455,7 +467,8 @@ class IndexCatalog:
         value predicate below the merge) or the result set is small.  A
         whole-index merged read of a hot-valued chunked index at scale
         should use the raw ``(value, chunk, doc_ids)`` rows instead
-        (``spark.read.parquet`` on the index path).
+        (``spark.read.schema(index_schema(meta)).parquet`` on the index
+        path).
 
         ``doc_id_col``: when given, the lookup DECLINES (returns None)
         unless the index was built over that id column — the same
@@ -468,11 +481,22 @@ class IndexCatalog:
         lookup recomputes it and DECLINES on mismatch, so an index over
         a table that was later appended to or rewritten falls back to
         the base-table plan instead of serving pre-append postings.
-        Rebuild with :meth:`build` to re-validate.  Per-lookup cost is
-        an O(#dirs) mtime-token walk; the O(#files) digest itself is
-        cached behind that token (functions/listing.py) — at 100 TB the
-        difference between stat-ing a handful of partition dirs and
-        re-listing 10^6 part-files per query.
+        Rebuild with :meth:`build` to re-validate.
+
+        Per-lookup cost, all on the driver and with no Spark job before
+        the caller's own action:
+
+        - the staleness gate's O(#dirs) mtime-token walk; the O(#files)
+          digest itself is cached behind that token
+          (functions/listing.py) — at 100 TB the difference between
+          stat-ing a handful of partition dirs and re-listing 10^6
+          part-files per query;
+        - the index read, with its schema pinned by
+          :func:`~..operators.inverted_index.index_schema` (no
+          schema-inference job over the index files) and its files
+          listed on the driver: one directory for a static index, one
+          root per live ``m=<n>`` merge for a streaming one
+          (streaming/index_maintenance.read_index).
         """
         meta = self._meta.get(self._key(table, field))
         if meta is None or not os.path.exists(meta["path"]):
@@ -497,15 +521,12 @@ class IndexCatalog:
             from ..streaming.index_maintenance import read_index_postings
 
             return read_index_postings(self.spark, meta["path"])
-        df = self.spark.read.parquet(meta["path"])
-        if meta.get("chunked"):
-            from pyspark.sql import functions as F
+        df = self._read(meta)
+        return merge_chunks(df, ["value"]) if meta.get("chunked") else df
 
-            df = (
-                df.groupBy("value")
-                .agg(F.sort_array(F.flatten(F.collect_list("doc_ids"))).alias("doc_ids"))
-            )
-        return df
+    def _read(self, meta: dict) -> DataFrame:
+        """Raw rows of a static index, read with its pinned schema."""
+        return self.spark.read.schema(index_schema(meta)).parquet(meta["path"])
 
     def lookup_by_doc_ids(
         self, table: str, field: str, doc_ids, doc_id_col: str | None = None
@@ -518,10 +539,10 @@ class IndexCatalog:
         has duplicates (the reference's join semantics duplicate postings
         per duplicated requested id — a posting-filter cannot), or the
         list is too large for a literal predicate
-        (plans/rewrite.ISIN_THRESHOLD)."""
-        from pyspark.sql import functions as F
-
-        from .rewrite import ISIN_THRESHOLD
+        (plans/rewrite.ISIN_THRESHOLD).  The posting-filter is one parsed
+        SQL expression (plans/rewrite.ids_in_sql), not a per-literal
+        Column tree."""
+        from .rewrite import ISIN_THRESHOLD, ids_in_sql
 
         ids = [int(i) for i in doc_ids]
         if len(ids) > ISIN_THRESHOLD or len(set(ids)) != len(ids):
@@ -529,11 +550,9 @@ class IndexCatalog:
         df = self.lookup(table, field, doc_id_col=doc_id_col)
         if df is None:
             return None
-        filtered = F.filter(F.col("doc_ids"), lambda x: x.isin(ids))
-        return (
-            df.select("value", filtered.alias("doc_ids"))
-            .where(F.size("doc_ids") > 0)
-        )
+        return df.selectExpr(
+            "value", f"filter(doc_ids, x -> {ids_in_sql('x', ids)}) AS doc_ids"
+        ).where("size(doc_ids) > 0")
 
     # -- composite (multi-field) indexes ----------------------------------
 
@@ -600,6 +619,7 @@ class IndexCatalog:
         fkey = self._composite_field_key(fields)
         path = self._path(table, fkey.replace("+", "__AND__"))
         vcols = [f"v_{f}" for f in norm]
+        schema = index_schema({"composite_fields": norm})
 
         def _build_and_write(frame: DataFrame) -> None:
             # norm entries ARE the flattened column names
@@ -624,7 +644,9 @@ class IndexCatalog:
                 idx = idx.repartition(
                     num_buckets, *vcols
                 ).sortWithinPartitions(*vcols)
-            idx.write.mode("overwrite").parquet(path)
+            idx.select(*schema.fieldNames()).write.mode("overwrite").parquet(
+                path
+            )
 
         src = self._source_root(df) if self._is_plain_scan(df) else None
         fp = self._write_with_stable_fingerprint(src, df, _build_and_write)
@@ -692,7 +714,7 @@ class IndexCatalog:
             if df is None:
                 return None
         else:
-            df = self.spark.read.parquet(meta["path"])
+            df = self._read(meta)
         for f, v in norm_eq.items():
             df = df.where(F.col(f"v_{f}") == F.lit(str(v)))
         return df

@@ -33,8 +33,15 @@ TABLES = (
 _CACHE_ATTR = "_pwis_table_handles"
 
 
-def _stat_key(path: str) -> tuple:
-    st = os.stat(path)
+def _stat_key(path: str) -> tuple | None:
+    """Memo key of a local table path, or None when ``os.stat`` cannot
+    see it — a missing path, or a URI (``file://``, ``hdfs://``): such a
+    read skips the memo and goes to ``spark.read.parquet``, which
+    resolves URIs and reports a missing path itself."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
     return (path, st.st_size, int(st.st_mtime_ns))
 
 
@@ -48,7 +55,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         except Exception:  # exotic session proxy: serve uncached
             cache = None
     key = _stat_key(path) if cache is not None else None
-    if cache is not None and key in cache:
+    if key is not None and key in cache:
         return cache[key]
     if name == "events":
         # events.ts is TIMESTAMP(NANOS) parquet, which Spark rejects by
@@ -65,7 +72,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     else:
         df = spark.read.parquet(path)
-    if cache is not None:
+    if key is not None:
         cache[key] = df
     return df
 

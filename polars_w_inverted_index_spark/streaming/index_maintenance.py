@@ -52,6 +52,21 @@ stand-in — a reader resolves _LATEST once and then reads immutable
 directories.  Directories no longer referenced are pruned after commit,
 which also collects orphans from merges that crashed before commit.
 
+Reader (:func:`read_index` and every raw read built on it: postings
+views, compaction, rebucket, the plain-row merges' touched buckets, the
+term search): one root per live ``m=<n>`` directory, partition-discovered
+under ``basePath=<index_path>``, with the marker's live
+``(m, bucket)`` pairs as a partition filter and the schema pinned by
+``operators/inverted_index.index_schema``.  So a read starts no Spark
+job of its own: no schema inference, and the file listing stays on the
+driver, because the root count is the number of live merges (at most
+the compaction dial plus one) rather than the number of segments,
+which passes Spark's parallel-listing threshold once an index holds
+more than 32.  The filter keeps every segment outside the marker
+unread: an orphan ``bucket=`` under a live ``m=`` (a plain-row merge
+that crashed between its marker swap and its prune) and any
+uncommitted ``m=<n+1>`` (never a root).
+
 Hot values: chunked rows are ``(value, chunk, doc_ids)`` with every
 array bounded by the cap, so no single row outgrows a task either.
 ``(value, chunk)`` is unique within one segment only — readers merge by
@@ -72,8 +87,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
-from ..operators.inverted_index import postings
+from ..operators.inverted_index import index_schema, merge_chunks, postings
 
 DEFAULT_N_BUCKETS = 16
 
@@ -121,21 +137,53 @@ def _bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("value")), F.lit(n_buckets))
 
 
+def _read_segments(
+    spark: SparkSession,
+    index_path: str,
+    meta: dict | None,
+    buckets: list[int] | None = None,
+) -> DataFrame | None:
+    """Raw rows of the segments the marker ``meta`` holds live — in every
+    bucket, or only in ``buckets`` — or None when there are none: one
+    root per ``m=<n>`` directory, the live ``(m, bucket)`` pairs as one
+    parsed partition filter, the partition columns typed in the read
+    schema (no type inference over their values) and dropped (see the
+    module docstring's Reader paragraph)."""
+    live = (meta or {}).get("buckets", {})
+    keys = live if buckets is None else [str(b) for b in buckets]
+    by_merge: dict[int, list[int]] = {}
+    for k in keys:
+        for rel in live.get(k, []):
+            m_dir, b_dir = os.path.split(rel)
+            by_merge.setdefault(int(m_dir.split("=", 1)[1]), []).append(
+                int(b_dir.split("=", 1)[1])
+            )
+    if not by_merge:
+        return None
+    pairs = " OR ".join(
+        f"(m = {m} AND bucket IN ({', '.join(map(str, sorted(bs)))}))"
+        for m, bs in sorted(by_merge.items())
+    )
+    schema = index_schema(meta).add("m", IntegerType()).add(
+        "bucket", IntegerType()
+    )
+    return (
+        spark.read.schema(schema)
+        .option("basePath", index_path)
+        .parquet(*[os.path.join(index_path, f"m={m}") for m in sorted(by_merge)])
+        .where(pairs)
+        .drop("m", "bucket")
+    )
+
+
 def read_index(spark: SparkSession, index_path: str) -> DataFrame | None:
     """Current committed snapshot of the index, or None if empty.
 
-    Resolves the pointer file once; the returned frame unions the
-    per-bucket directories current at resolution time (immutable, so the
-    frame stays consistent even while merges continue)."""
-    meta = _read_marker(index_path)
-    if meta is None or not meta["buckets"]:
-        return None
-    paths = [
-        os.path.join(index_path, rel)
-        for segs in meta["buckets"].values()
-        for rel in segs
-    ]
-    return spark.read.parquet(*paths)
+    Resolves the pointer file once; the returned frame reads the segment
+    directories live at resolution time (immutable, so the frame stays
+    consistent even while merges continue) and nothing else — see the
+    module docstring's Reader paragraph."""
+    return _read_segments(spark, index_path, _read_marker(index_path))
 
 
 def read_index_postings(
@@ -158,18 +206,11 @@ def read_index_postings(
             f"{meta['composite_fields']}); read it with "
             "read_composite_index."
         )
-    df = read_index(spark, index_path)
+    df = _read_segments(spark, index_path, meta)
     if df is None:
         return None
     if meta.get("max_postings_per_row") is not None:
-        df = (
-            df.groupBy("value")
-            .agg(
-                F.sort_array(F.flatten(F.collect_list("doc_ids"))).alias(
-                    "doc_ids"
-                )
-            )
-        )
+        df = merge_chunks(df, ["value"])
     return df
 
 
@@ -222,6 +263,27 @@ def _rechunked(df: DataFrame, meta: dict) -> DataFrame:
     )
 
 
+def _write_segments(df: DataFrame, meta: dict, out: str) -> list[int]:
+    """Write ``df`` (index rows plus a ``bucket`` column) as one segment
+    per bucket under ``out`` — ``out/bucket=<k>``, one file each via
+    ``repartition("bucket")``, columns in ``index_schema(meta)`` order —
+    and return the buckets written, read off the written tree (the write
+    is the only Spark action)."""
+    df.select("bucket", *index_schema(meta).fieldNames()).repartition(
+        "bucket"
+    ).write.mode("overwrite").partitionBy("bucket").parquet(out)
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(out)
+        if d.startswith("bucket=")
+    )
+
+
+def _pointers(next_m: int, buckets: list[int]) -> dict[str, str]:
+    """Marker pointers of the segments merge ``next_m`` wrote."""
+    return {str(b): os.path.join(f"m={next_m}", f"bucket={b}") for b in buckets}
+
+
 def compact_index(spark: SparkSession, index_path: str) -> None:
     """Squash segment + chunk fragmentation: re-chunk every key to the
     minimal ``ceil(n/max)`` rows and fold every bucket's segment list
@@ -241,7 +303,7 @@ def compact_index(spark: SparkSession, index_path: str) -> None:
     meta = _read_marker(index_path)
     if meta is None or meta.get("max_postings_per_row") is None:
         return
-    df = read_index(spark, index_path)
+    df = _read_segments(spark, index_path, meta)
     if df is None:
         return
     n_buckets = meta["n_buckets"]
@@ -258,19 +320,11 @@ def compact_index(spark: SparkSession, index_path: str) -> None:
     # vs 2.0/2.0): AQE now coalesces the lone repartition("bucket")
     # write shuffle to few tasks, which beats the gate's static width,
     # and the probe jobs the gate used to save no longer exist.
-    compacted.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(out)
-    written = [
-        d for d in os.listdir(out) if d.startswith("bucket=")
-    ]
-    new_pointers = {
-        d.split("=", 1)[1]: os.path.join(f"m={next_m}", d) for d in written
-    }
+    written = _write_segments(compacted, meta, out)
     _commit(
         index_path,
         meta,
-        new_pointers,
+        _pointers(next_m, written),
         batch_id=None,
         n_buckets=n_buckets,
         next_m=next_m,
@@ -351,7 +405,7 @@ def rebucket_index(
             f"no index at {index_path} — nothing to rebucket; the first "
             "merge takes n_buckets directly."
         )
-    df = read_index(spark, index_path)
+    df = _read_segments(spark, index_path, meta)
     if df is None:  # committed-but-empty index: just re-dial the marker
         _commit(
             index_path, meta, {}, None, new_n,
@@ -376,17 +430,11 @@ def rebucket_index(
     next_m = meta.get("merge", -1) + 1
     out = os.path.join(index_path, f"m={next_m}")
     # r15: gate removed (see compact_index — lost both A/B orders)
-    rebucketed.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(out)
-    written = [d for d in os.listdir(out) if d.startswith("bucket=")]
-    new_pointers = {
-        d.split("=", 1)[1]: os.path.join(f"m={next_m}", d) for d in written
-    }
+    written = _write_segments(rebucketed, meta, out)
     _commit(
         index_path,
         meta,
-        new_pointers,
+        _pointers(next_m, written),
         batch_id=None,
         n_buckets=new_n,
         next_m=next_m,
@@ -496,6 +544,7 @@ def merge_postings_batch(
             )
         )
     new = new.withColumn("bucket", _bucket_col(n_buckets))
+    layout = {"max_postings_per_row": max_postings_per_row}
     # r15: the r14 tiny-input static-planning gate is gone from the
     # merge paths (lost both A/B orders after the write-only
     # restructure — see compact_index)
@@ -510,16 +559,7 @@ def merge_postings_batch(
         # afterwards (the compact/rebucket convention), replacing the
         # r14 probe collect + persist pair.  One file per bucket via
         # repartition("bucket") as before.
-        new.select(
-            "bucket", "value", "chunk", "doc_ids"
-        ).repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(out)
-        touched = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out)
-            if d.startswith("bucket=")
-        )
+        touched = _write_segments(new, layout, out)
         if not touched:  # empty batch: still commit the batch_id; the
             # empty m= directory is collected by the commit's prune
             _commit(
@@ -527,13 +567,9 @@ def merge_postings_batch(
                 max_rows=max_postings_per_row,
             )
             return
-        new_pointers = {
-            str(b): os.path.join(f"m={next_m}", f"bucket={b}")
-            for b in touched
-        }
         _commit(
-            index_path, meta, new_pointers, batch_id, n_buckets, next_m,
-            max_rows=max_postings_per_row, append=True,
+            index_path, meta, _pointers(next_m, touched), batch_id,
+            n_buckets, next_m, max_rows=max_postings_per_row, append=True,
         )
         _maybe_autocompact(spark, index_path, max_segments_per_bucket)
         return
@@ -550,42 +586,22 @@ def merge_postings_batch(
             index_path, meta, {}, batch_id, n_buckets, max_rows=max_postings_per_row
         )
         return
-    old_buckets = (meta or {}).get("buckets", {})
-    old_paths = [
-        os.path.join(index_path, rel)
-        for b in touched
-        for rel in old_buckets.get(str(b), [])
-    ]
-    if old_paths:
-        old = spark.read.parquet(*old_paths).withColumn(
-            "bucket", _bucket_col(n_buckets)
-        )
-        merged = (
-            old.unionByName(new)
-            .groupBy("bucket", "value")
-            .agg(
-                F.sort_array(F.flatten(F.collect_list("doc_ids"))).alias(
-                    "doc_ids"
-                )
-            )
-        )
+    old = _read_segments(spark, index_path, meta, touched)
+    if old is not None:
+        old = old.withColumn("bucket", _bucket_col(n_buckets))
+        merged = merge_chunks(old.unionByName(new), ["bucket", "value"])
     else:
         merged = new.select(
             "bucket", "value", F.sort_array("doc_ids").alias("doc_ids")
         )
     # one file-per-bucket layout: repartition on bucket so each partition
     # directory is written by one task (no tiny-file explosion)
-    merged.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(out)
+    _write_segments(merged, layout, out)
     new.unpersist()
-    new_pointers = {
-        str(b): os.path.join(f"m={next_m}", f"bucket={b}") for b in touched
-    }
     _commit(
         index_path,
         meta,
-        new_pointers,
+        _pointers(next_m, touched),
         batch_id,
         n_buckets,
         next_m,
@@ -759,6 +775,9 @@ def merge_composite_postings_batch(
             )
         )
     new = new.withColumn("bucket", bucket)
+    layout = {
+        "composite_fields": norm, "max_postings_per_row": max_postings_per_row
+    }
     # r15: gate removed (see the single-field merge)
     next_m = (meta or {}).get("merge", -1) + 1
     out = os.path.join(index_path, f"m={next_m}")
@@ -767,30 +786,17 @@ def merge_composite_postings_batch(
         # written; committed segments are never re-read or re-written.
         # r15: write-only action, touched buckets read off the written
         # tree (see the single-field merge).
-        new.select(
-            "bucket", *vcols, "chunk", "doc_ids"
-        ).repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(out)
-        touched = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out)
-            if d.startswith("bucket=")
-        )
+        touched = _write_segments(new, layout, out)
         if not touched:
             _commit(
                 index_path, meta, {}, batch_id, n_buckets,
                 max_rows=max_postings_per_row, composite_fields=norm,
             )
             return
-        new_pointers = {
-            str(b): os.path.join(f"m={next_m}", f"bucket={b}")
-            for b in touched
-        }
         _commit(
-            index_path, meta, new_pointers, batch_id, n_buckets, next_m,
-            max_rows=max_postings_per_row, composite_fields=norm,
-            append=True,
+            index_path, meta, _pointers(next_m, touched), batch_id,
+            n_buckets, next_m, max_rows=max_postings_per_row,
+            composite_fields=norm, append=True,
         )
         _maybe_autocompact(spark, index_path, max_segments_per_bucket)
         return
@@ -808,39 +814,25 @@ def merge_composite_postings_batch(
             max_rows=max_postings_per_row, composite_fields=norm,
         )
         return
-    old_buckets = (meta or {}).get("buckets", {})
-    old_paths = [
-        os.path.join(index_path, rel)
-        for b in touched
-        for rel in old_buckets.get(str(b), [])
-    ]
-    if old_paths:
-        old = spark.read.parquet(*old_paths).withColumn("bucket", bucket)
-        merged = (
-            old.select("bucket", *vcols, "doc_ids")
-            .unionByName(new.select("bucket", *vcols, "doc_ids"))
-            .groupBy("bucket", *vcols)
-            .agg(
-                F.sort_array(F.flatten(F.collect_list("doc_ids"))).alias(
-                    "doc_ids"
-                )
-            )
+    old = _read_segments(spark, index_path, meta, touched)
+    if old is not None:
+        old = old.withColumn("bucket", bucket)
+        merged = merge_chunks(
+            old.select("bucket", *vcols, "doc_ids").unionByName(
+                new.select("bucket", *vcols, "doc_ids")
+            ),
+            ["bucket", *vcols],
         )
     else:
         merged = new.select(
             "bucket", *vcols, F.sort_array("doc_ids").alias("doc_ids")
         )
-    merged.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(out)
+    _write_segments(merged, layout, out)
     new.unpersist()
-    new_pointers = {
-        str(b): os.path.join(f"m={next_m}", f"bucket={b}") for b in touched
-    }
     _commit(
         index_path,
         meta,
-        new_pointers,
+        _pointers(next_m, touched),
         batch_id,
         n_buckets,
         next_m,
@@ -869,17 +861,11 @@ def read_composite_index(
             f"index at {index_path} is single-field; read it with "
             "read_index_postings."
         )
-    df = read_index(spark, index_path)
+    df = _read_segments(spark, index_path, meta)
     if df is None:
         return None
-    df = df.drop("bucket")
     if meta.get("max_postings_per_row") is not None:
-        keys = _key_cols(meta)
-        df = df.groupBy(*keys).agg(
-            F.sort_array(F.flatten(F.collect_list("doc_ids"))).alias(
-                "doc_ids"
-            )
-        )
+        df = merge_chunks(df, _key_cols(meta))
     return df
 
 

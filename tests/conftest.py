@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -20,6 +21,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``jobs_started(fn) -> (fn(), ids of the Spark jobs fn started)``,
+    counted with the status tracker under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-started-{uuid.uuid4().hex}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 # ---------------------------------------------------------------------------
@@ -69,3 +91,11 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.name.split("[")[0] in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # a renamed or deleted slow test would silently move back into the
+    # default run (or vanish from the full one): when every test module
+    # here was collected, each SLOW_TESTS entry must name a collected test
+    modules = {item.path.name for item in items}
+    if modules >= {p.name for p in Path(__file__).parent.glob("test_*.py")}:
+        names = {item.name.split("[")[0] for item in items}
+        missing = sorted(SLOW_TESTS - names)
+        assert not missing, f"SLOW_TESTS names no collected test: {missing}"

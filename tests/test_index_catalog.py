@@ -969,3 +969,180 @@ def test_streaming_composite_chunked_lsm_converges_and_appends(
         ).collect()
     )
     assert got_ids == truth and len(truth) > 0
+
+
+# -- id sets as one parsed SQL expression; pinned schema; no jobs before
+#    the action -------------------------------------------------------------
+
+
+def _same_optimized(a, b) -> bool:
+    """Optimized plans equal up to expression ids."""
+    pa = a._jdf.queryExecution().optimizedPlan()
+    return pa.sameResult(b._jdf.queryExecution().optimizedPlan())
+
+
+def _isin_ids(n: int) -> list[int]:
+    return [int(i) * 7 for i in range(n)]
+
+
+@pytest.mark.parametrize("n", [0, 1, 100, 10_000])
+def test_filter_by_doc_ids_plan_equals_column_isin(spark, lineitem, n):
+    """The SQL ``IN`` form is the Column-API ``isin`` plan, at every list
+    size the rewrite serves."""
+    from polars_w_inverted_index_spark.plans.rewrite import filter_by_doc_ids
+
+    ids = _isin_ids(n)
+    got = filter_by_doc_ids(lineitem, ids, "l_orderkey")
+    want = lineitem.where(F.col("l_orderkey").isin(ids))
+    assert _same_optimized(got, want)
+    if n <= 100:
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
+@pytest.fixture(scope="module")
+def returnflag_catalog(spark, lineitem, tmp_path_factory):
+    cat = IndexCatalog(spark, str(tmp_path_factory.mktemp("idx")))
+    cat.build(lineitem, "lineitem", "l_returnflag", doc_id_col="l_orderkey")
+    return cat
+
+
+@pytest.mark.parametrize("n", [0, 1, 100, 10_000])
+def test_lookup_by_doc_ids_plan_equals_column_isin(returnflag_catalog, n):
+    cat = returnflag_catalog
+    ids = _isin_ids(n)
+    got = cat.lookup_by_doc_ids("lineitem", "l_returnflag", ids)
+    base = cat.lookup("lineitem", "l_returnflag")
+    want = base.select(
+        "value",
+        F.filter(F.col("doc_ids"), lambda x: x.isin(ids)).alias("doc_ids"),
+    ).where(F.size("doc_ids") > 0)
+    assert _same_optimized(got, want)
+    if n <= 100:
+        assert _vm(got) == _vm(want)
+
+
+def test_id_set_expression_edge_cases(spark, lineitem, tmp_path_factory):
+    """Empty list → zero rows (``IN ()`` would not parse); ids beyond the
+    int range and negative ids keep their bigint values; duplicate ids
+    still take the multiplicity-preserving join (and the index declines
+    them)."""
+    from polars_w_inverted_index_spark.plans.rewrite import filter_by_doc_ids
+
+    big = [2**31 + 5, -(2**31) - 1, -3, 2**62]
+    df = spark.createDataFrame(
+        [(i, str(i)) for i in big + [0, 7]], "doc_id long, v string"
+    )
+    assert filter_by_doc_ids(df, [], "doc_id").count() == 0
+    got = filter_by_doc_ids(df, big, "doc_id")
+    assert sorted(r["doc_id"] for r in got.collect()) == sorted(big)
+    assert _same_optimized(got, df.where(F.col("doc_id").isin(big)))
+    assert dict(got.dtypes)["doc_id"] == "bigint"
+
+    dup = filter_by_doc_ids(df, [-3, -3, 0], "doc_id")
+    assert "Join" in dup._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(r["doc_id"] for r in dup.collect()) == [-3, -3, 0]
+
+    root = str(tmp_path_factory.mktemp("idx"))
+    cat = IndexCatalog(spark, root)
+    cat.build(df, "t", "v")
+    assert _vm(cat.lookup_by_doc_ids("t", "v", [])) == {}
+    assert _vm(cat.lookup_by_doc_ids("t", "v", big[:2])) == {
+        str(i): [i] for i in big[:2]
+    }
+    assert cat.lookup_by_doc_ids("t", "v", [-3, -3]) is None
+
+
+def _pinned_dtypes(meta: dict) -> list:
+    from polars_w_inverted_index_spark.operators.inverted_index import (
+        index_schema,
+    )
+
+    return [(f.name, f.dataType.simpleString()) for f in index_schema(meta)]
+
+
+def test_static_writers_write_the_pinned_schema(spark, lineitem, tmp_path):
+    """``build``, chunked ``build``, ``build_many`` (including an all-null
+    field) and ``build_composite`` write files whose inferred schema is
+    ``index_schema`` of the entry they record."""
+    df = lineitem.withColumn("nothing", F.lit(None).cast("string"))
+    cat = IndexCatalog(spark, str(tmp_path / "cat"))
+    paths = [
+        cat.build(lineitem, "li", "l_returnflag", doc_id_col="l_orderkey"),
+        cat.build(
+            lineitem, "li", "l_linestatus", doc_id_col="l_orderkey",
+            chunked=True, max_postings_per_row=50,
+        ),
+        *cat.build_many(
+            df, "many", ["l_linestatus", "nothing"], doc_id_col="l_orderkey"
+        ).values(),
+        cat.build_composite(
+            lineitem, "li", ["l_returnflag", "l_linestatus"],
+            doc_id_col="l_orderkey",
+        ),
+    ]
+    entries = {m["path"]: m for m in cat._meta.values()}
+    for path in paths:
+        inferred = spark.read.parquet(path).dtypes
+        assert inferred == _pinned_dtypes(entries[path])
+    chunked = entries[paths[1]]
+    assert [n for n, _ in _pinned_dtypes(chunked)] == [
+        "value", "chunk", "doc_ids"
+    ]
+
+
+def test_lookups_start_no_spark_job_before_the_action(
+    spark, lineitem, tmp_path, jobs_started
+):
+    """A catalog read costs only the caller's own action: no
+    schema-inference job for a static or streaming index, and no
+    parallel-listing job for a streaming index holding more segment
+    directories (40) than Spark's parallel-discovery threshold (32)."""
+    from polars_w_inverted_index_spark.streaming.index_maintenance import (
+        index_fragmentation,
+        merge_postings_batch,
+    )
+
+    cat = IndexCatalog(spark, str(tmp_path / "cat"))
+    cat.build(lineitem, "li", "l_returnflag", doc_id_col="l_orderkey")
+    cat.build(
+        lineitem, "li", "l_linestatus", doc_id_col="l_orderkey",
+        chunked=True, max_postings_per_row=50,
+    )
+    cat.build_composite(
+        lineitem, "li", ["l_returnflag", "l_linestatus"],
+        doc_id_col="l_orderkey",
+    )
+    idx = str(tmp_path / "stream")
+    src = spark.range(0, 400).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 64).cast("string").alias("v")
+    )
+    for b in range(5):
+        merge_postings_batch(
+            src.where(F.col("doc_id") % 5 == b), "v", idx, batch_id=b,
+            n_buckets=8, max_postings_per_row=10,
+            max_segments_per_bucket=None,
+        )
+    assert index_fragmentation(idx)["segments"] == 40
+    cat.adopt_streaming("li", "v", idx)
+
+    reads = {
+        "static": lambda: cat.lookup("li", "l_returnflag"),
+        "static chunked": lambda: cat.lookup("li", "l_linestatus"),
+        "static ids": lambda: cat.lookup_by_doc_ids(
+            "li", "l_returnflag", list(range(100))
+        ),
+        "static composite": lambda: cat.lookup_composite(
+            "li", {"l_returnflag": "R", "l_linestatus": "F"}
+        ),
+        "streaming": lambda: cat.lookup("li", "v"),
+        "streaming ids": lambda: cat.lookup_by_doc_ids(
+            "li", "v", list(range(100))
+        ),
+    }
+    for name, read in reads.items():
+        df, jobs = jobs_started(read)
+        assert df is not None, name
+        assert jobs == [], (name, jobs)
+        df.collect()
+    got = _vm(cat.lookup("li", "v"))
+    assert got == _vm(postings(src, "v"))

@@ -12,7 +12,10 @@ after every sequence:
   whose ``batch_id=None`` commits must preserve the replay guard);
 - chunk rows stay bounded and per-segment (value, chunk) stays unique
   whenever the last mutation was a fold (compact/rebucket);
-- the marker's fragmentation stats match the on-disk pointer state.
+- the marker's fragmentation stats match the on-disk pointer state;
+- after EVERY op, ``read_index`` serves exactly the union of the
+  marker's live segments (the merge-rooted reader never serves an
+  orphan or uncommitted directory).
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -55,6 +59,29 @@ _SETTINGS = settings(
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def _assert_reader_serves_marker(spark, idx: str) -> None:
+    """``read_index`` returns exactly the rows of the marker's live
+    segments, each read by its own path — nothing from an orphan
+    ``bucket=`` or an uncommitted ``m=`` directory beside them."""
+    meta = im._read_marker(idx)
+    got = im.read_index(spark, idx)
+    rels = [] if meta is None else [
+        rel for segs in meta["buckets"].values() for rel in segs
+    ]
+    if not rels:
+        assert got is None
+        return
+    want = spark.read.parquet(*[os.path.join(idx, rel) for rel in rels])
+    assert _rows(got) == _rows(want)
 
 
 @_SETTINGS
@@ -105,6 +132,7 @@ def test_fuzz_interleaved_maintenance_converges(ops, cap, tmp_path_factory):
                 continue  # rebucket on an empty index raises by contract
             im.rebucket_index(spark, idx, arg)
             folded = True
+        _assert_reader_serves_marker(spark, idx)
 
     if not os.path.exists(os.path.join(idx, "_LATEST")):
         return  # sequence never merged anything
@@ -518,6 +546,7 @@ def test_fuzz_crash_windows_heal(ops, cap, tmp_path_factory):
                 assert after == before
             else:  # job no-opped before its commit (e.g. empty index)
                 assert after == before
+        _assert_reader_serves_marker(spark, idx)
 
     if not os.path.exists(os.path.join(idx, "_LATEST")):
         return  # sequence never merged anything
@@ -605,3 +634,106 @@ def test_crash_orphan_dir_collected_deterministic(tmp_path):
         for r in im.read_index_postings(spark, idx).collect()
     }
     assert got == {"a": [1, 3, 4], "b": [2]}
+
+
+def _buckets_of(spark, values: list[str], n_buckets: int) -> dict:
+    """value -> bucket, by the index's own bucket expression."""
+    df = spark.createDataFrame([(v,) for v in values], "value string")
+    return {
+        r["value"]: r["b"]
+        for r in df.select(
+            "value", im._bucket_col(n_buckets).alias("b")
+        ).collect()
+    }
+
+
+def _on_disk(idx: str) -> set[str]:
+    return {
+        os.path.join(m, b)
+        for m in os.listdir(idx)
+        if m.startswith("m=")
+        for b in os.listdir(os.path.join(idx, m))
+        if b.startswith("bucket=")
+    }
+
+
+def test_orphan_bucket_under_live_merge_never_served(tmp_path):
+    """A plain-row merge killed between its marker swap (``os.replace``)
+    and ``_prune`` leaves the bucket it replaced on disk under a merge
+    directory that is still live for its other buckets.  The reader
+    roots that live ``m=`` directory, so only its partition filter keeps
+    the stale bucket out; the next commit's prune collects it."""
+    spark = get_session("property_tests")
+    idx = str(tmp_path / "idx")
+    schema = "event_id long, event_type string"
+    values = ["a", "b", "c", "d", "e", "f", "g", "h"]
+    bucket = _buckets_of(spark, values, 2)
+    x = next(v for v in values if bucket[v] == 0)
+    y = next(v for v in values if bucket[v] == 1)
+    im.merge_postings_batch(
+        spark.createDataFrame([(1, x), (2, y)], schema),
+        "event_type", idx, "event_id", batch_id=0, n_buckets=2,
+    )
+    real = im._prune
+    im._prune = lambda *a, **k: (_ for _ in ()).throw(_Crash())
+    try:
+        im.merge_postings_batch(
+            spark.createDataFrame([(3, x)], schema),
+            "event_type", idx, "event_id", batch_id=1,
+        )
+        raise AssertionError("injected crash did not fire")
+    except _Crash:
+        pass
+    finally:
+        im._prune = real
+
+    marker = im._read_marker(idx)
+    assert marker["batch_id"] == 1  # the swap committed the merge
+    assert marker["buckets"] == {"0": ["m=1/bucket=0"], "1": ["m=0/bucket=1"]}
+    assert "m=0/bucket=0" in _on_disk(idx)  # the orphan, under live m=0
+    _assert_reader_serves_marker(spark, idx)
+    got = {
+        r["value"]: sorted(r["doc_ids"])
+        for r in im.read_index_postings(spark, idx).collect()
+    }
+    assert got == {x: [1, 3], y: [2]}
+
+    im.merge_postings_batch(
+        spark.createDataFrame([(4, y)], schema),
+        "event_type", idx, "event_id", batch_id=2,
+    )
+    assert _on_disk(idx) == {"m=1/bucket=0", "m=2/bucket=1"}
+    _assert_reader_serves_marker(spark, idx)
+
+
+@pytest.mark.parametrize("cap", [None, 2])
+def test_uncommitted_merge_dir_never_served(tmp_path, cap):
+    """A merge killed after writing ``m=<n+1>`` but before its marker
+    swap leaves that directory on disk uncommitted; readers keep
+    serving exactly the committed snapshot (plain-row and chunked)."""
+    spark = get_session("property_tests")
+    idx = str(tmp_path / "idx")
+    schema = "event_id long, event_type string"
+    im.merge_postings_batch(
+        spark.createDataFrame([(1, "a"), (2, "b"), (3, "a")], schema),
+        "event_type", idx, "event_id", batch_id=0, n_buckets=2,
+        max_postings_per_row=cap, max_segments_per_bucket=None,
+    )
+    before = _rows(im.read_index(spark, idx))
+    real = im._commit
+    im._commit = lambda *a, **k: (_ for _ in ()).throw(_Crash())
+    try:
+        im.merge_postings_batch(
+            spark.createDataFrame([(4, "a"), (5, "b")], schema),
+            "event_type", idx, "event_id", batch_id=1,
+        )
+        raise AssertionError("injected crash did not fire")
+    except _Crash:
+        pass
+    finally:
+        im._commit = real
+
+    assert im._read_marker(idx)["merge"] == 0
+    assert any(rel.startswith("m=1") for rel in _on_disk(idx))
+    assert _rows(im.read_index(spark, idx)) == before
+    _assert_reader_serves_marker(spark, idx)

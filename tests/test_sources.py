@@ -233,3 +233,30 @@ def test_csv_corrupt_line_modes(spark, tmp_path_factory):
 
     dropped = read_logs_csv(spark, str(p), mode="DROPMALFORMED").collect()
     assert len(dropped) == 1 and dropped[0]["doc_id"] == 1
+
+
+def test_load_table_stat_key_guards_non_local_paths(tmp_path):
+    """``os.stat`` cannot see a missing path or a URI: the memo key is
+    None for both instead of an ``OSError``."""
+    from polars_w_inverted_index_spark.sources.tables import _stat_key
+
+    assert _stat_key(str(tmp_path / "missing.parquet")) is None
+    local = tmp_path / "t.parquet"
+    local.write_bytes(b"x")
+    assert _stat_key(f"file://{local}") is None
+    assert _stat_key(str(local))[0] == str(local)
+
+
+def test_load_table_missing_path_and_file_uri(spark, tmp_path):
+    """A missing table reaches Spark's own path error, not an OSError
+    from the memo; a ``file://`` root loads (uncached) through Spark."""
+    from pyspark.errors import AnalysisException
+
+    from polars_w_inverted_index_spark.sources.tables import load_table
+
+    with pytest.raises(AnalysisException):
+        load_table(spark, str(tmp_path / "nowhere"), "region")
+    spark.range(5).write.parquet(str(tmp_path / "region.parquet"))
+    df = load_table(spark, f"file://{tmp_path}", "region")
+    assert df.count() == 5
+    assert load_table(spark, f"file://{tmp_path}", "region") is not df

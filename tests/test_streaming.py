@@ -1109,3 +1109,126 @@ def test_streaming_lsm_index_end_to_end(
     raw = read_index(spark, index_path).collect()
     assert all(len(r["doc_ids"]) <= 2 * 25 for r in raw)
     assert index_fragmentation(index_path)["max_segments_per_bucket"] <= 1
+
+
+# -- pinned index schema; merge-rooted reader with no jobs before the
+#    action --------------------------------------------------------------
+
+
+def _pinned_dtypes(meta: dict) -> list:
+    from polars_w_inverted_index_spark.operators.inverted_index import (
+        index_schema,
+    )
+
+    return [(f.name, f.dataType.simpleString()) for f in index_schema(meta)]
+
+
+@pytest.mark.parametrize("chunked", [False, True])
+@pytest.mark.parametrize("composite", [False, True])
+def test_streaming_writers_write_the_pinned_schema(
+    spark, tmp_path, chunked, composite
+):
+    """Every streaming writer — the first and a later merge (plain or
+    chunked, single-field or composite), compaction and rebucket — writes
+    segments whose inferred schema is ``index_schema`` of the marker it
+    commits, and ``read_index`` serves exactly that schema."""
+    import os
+
+    import polars_w_inverted_index_spark.streaming.index_maintenance as im
+
+    idx = str(tmp_path / "idx")
+    df = spark.createDataFrame(
+        [(i, f"v{i % 5}", f"w{i % 2}") for i in range(40)],
+        "doc_id long, v string, w string",
+    )
+    opts = dict(
+        n_buckets=3, max_postings_per_row=4 if chunked else None,
+        max_segments_per_bucket=None,
+    )
+
+    def merge(batch, batch_id):
+        if composite:
+            im.merge_composite_postings_batch(
+                batch, ["v", "w"], idx, batch_id=batch_id, **opts
+            )
+        else:
+            im.merge_postings_batch(batch, "v", idx, batch_id=batch_id, **opts)
+
+    def check():
+        meta = im._read_marker(idx)
+        newest = f"m={meta['merge']}"
+        written = [
+            os.path.join(idx, rel)
+            for segs in meta["buckets"].values()
+            for rel in segs
+            if rel.startswith(newest + os.sep)
+        ]
+        assert written
+        assert spark.read.parquet(*written).dtypes == _pinned_dtypes(meta)
+        assert im.read_index(spark, idx).dtypes == _pinned_dtypes(meta)
+
+    merge(df.where("doc_id < 20"), 0)
+    check()
+    merge(df.where("doc_id >= 20"), 1)  # plain rows: old + new postings
+    check()
+    if chunked:
+        im.compact_index(spark, idx)
+        check()
+    im.rebucket_index(spark, idx, 2)
+    check()
+    if composite:
+        view = im.read_composite_index(spark, idx)
+        got = {(r["v_v"], r["v_w"]): list(r["doc_ids"]) for r in view.collect()}
+        assert got == {
+            (f"v{a}", f"w{b}"): [i for i in range(40) if i % 5 == a and i % 2 == b]
+            for a in range(5) for b in range(2)
+            if any(i % 5 == a and i % 2 == b for i in range(40))
+        }
+    else:
+        got = {
+            r["value"]: list(r["doc_ids"])
+            for r in im.read_index_postings(spark, idx).collect()
+        }
+        assert got == {f"v{a}": list(range(a, 40, 5)) for a in range(5)}
+
+
+def test_lsm_reads_start_no_spark_job_before_the_action(
+    spark, tmp_path, jobs_started
+):
+    """``read_index``, ``read_index_postings`` and ``read_composite_index``
+    over 40 live segments (above Spark's parallel-discovery threshold of
+    32 paths) start no job before the action: one root per live merge,
+    listed on the driver, schema pinned."""
+    import polars_w_inverted_index_spark.streaming.index_maintenance as im
+
+    src = spark.range(0, 400).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 64).cast("string").alias("v"),
+        (F.col("id") % 3).cast("string").alias("w"),
+    )
+    single, comp = str(tmp_path / "single"), str(tmp_path / "comp")
+    for b in range(5):
+        batch = src.where(F.col("doc_id") % 5 == b)
+        opts = dict(
+            batch_id=b, n_buckets=8, max_postings_per_row=10,
+            max_segments_per_bucket=None,
+        )
+        im.merge_postings_batch(batch, "v", single, **opts)
+        im.merge_composite_postings_batch(batch, ["v", "w"], comp, **opts)
+    assert im.index_fragmentation(single)["segments"] == 40
+
+    for name, read in {
+        "read_index": lambda: im.read_index(spark, single),
+        "read_index_postings": lambda: im.read_index_postings(spark, single),
+        "read_composite_index": lambda: im.read_composite_index(spark, comp),
+    }.items():
+        df, jobs = jobs_started(read)
+        assert jobs == [], (name, jobs)
+        assert df.count() > 0
+    got = {
+        r["value"]: list(r["doc_ids"])
+        for r in im.read_index_postings(spark, single).collect()
+    }
+    assert got == {
+        r["value"]: list(r["doc_ids"]) for r in postings(src, "v").collect()
+    }
